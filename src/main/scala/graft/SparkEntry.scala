@@ -1270,7 +1270,8 @@ object SparkEntry {
 
     // SQL MERGE + maintenance procedures under the driver oracle: CTAS a
     // manifest table from orders, MERGE a mixed update+insert batch (the
-    // canonical keyed upsert — one upsertKeyedDv commit), CALL
+    // canonical keyed upsert — mergeRows' image-elision path, one
+    // merge-dv commit), CALL
     // graft.compact_small (data-neutral by contract; the oracle proves
     // it), and aggregate the final state. The oracle replays the upsert
     // as a left-join override + anti-join insert over the source parquet.

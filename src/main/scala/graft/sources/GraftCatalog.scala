@@ -807,10 +807,7 @@ private[graft] case class GraftStagedTable(dir: String,
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-              val (fl, fp) =
-                if (pcols.nonEmpty)
-                  ManifestStore.stagePartitioned(data, dir, pcols)
-                else ManifestStore.stageData(data, dir)
+              val (fl, fp) = ManifestStore.stageData(data, dir, pcols)
               stagedFiles = fl
               stagedParts = fp
             }

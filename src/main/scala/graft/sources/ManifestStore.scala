@@ -670,12 +670,7 @@ object ManifestStore {
     */
   private[sources] def pruneFilesPhys(snap: Snapshot, column: String,
                                       lo: Any, hi: Any): Seq[String] =
-    snap.files.filter { rel =>
-      partitionAdmits(snap, rel, column, lo, hi).getOrElse {
-        statsAdmit(snap, rel, column, lo, hi)
-      } && transformAdmits(snap, rel, column, lo, hi) &&
-        bloomAdmits(snap, rel, column, lo, hi)
-    }
+    pruneFilesWherePhys(snap, Seq((column, lo, hi)))
 
   /** Logical column → the name recorded in file-level metadata. */
   private def physFor(snap: Snapshot, column: String): String =
@@ -1858,16 +1853,12 @@ object ManifestStore {
     val selectedSet = selected.toSet
     val cur = readSnapshot(spark, dir, snap.copy(files = selected), schema)
     midFlight()
-    val combine = (prev: Seq[String], fresh: Seq[String]) => {
-      if (!selectedSet.forall(prev.contains))
-        throw new java.util.ConcurrentModificationException(
-          s"snapshot changed under migrateLayout on $dir — a concurrent " +
-            "commit rewrote or dropped a migrating file; retry")
-      prev.filterNot(selectedSet.contains) ++ fresh
-    }
+    // a concurrent commit that rewrote, dropped or tombstoned a migrating
+    // file aborts; the caller retries
     try {
       val v = appendPartitioned(cur, dir, snap.partitionCols, op = "compact",
-        combine = combine, guard = Some(dvUnchangedGuard(snap, selected)))
+        combine = (prev, fresh) => prev.filterNot(selectedSet.contains) ++ fresh,
+        guard = Some(touchedGuard(snap, "migrateLayout", selected, selected)))
       Some((v, selected.size, oldGen.size - selected.size))
     } catch { case _: java.util.ConcurrentModificationException => None }
   }
@@ -1928,29 +1919,15 @@ object ManifestStore {
   /** Write `df`'s data files under the table WITHOUT publishing — the
     * staged half of an atomic CTAS/REPLACE ([[publishStaged]] publishes,
     * [[GraftStagedTable]] orchestrates). Returns the relative file list
-    * (and per-file partition values for the partitioned variant). Staged
+    * (and per-file partition values when `partitionCols` is set). Staged
     * files are invisible until published and vacuum-collectable if
     * abandoned.
     */
-  private[sources] def stageData(df: DataFrame, dir: String)
-      : (Seq[String], Map[String, Map[String, String]]) = {
-    val spark = df.sparkSession
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"d-$nonce"
-    df.write.mode("error").parquet(new Path(dir, dataRel).toString)
-    val f = fs(spark, dir)
-    (f.listStatus(new Path(dir, dataRel)).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .sorted.map(n => s"$dataRel/$n"), Map.empty)
-  }
-
-  /** [[stageData]]'s hive-partitioned sibling. */
-  private[sources] def stagePartitioned(df: DataFrame, dir: String,
-                                        partitionCols: Seq[String])
-      : (Seq[String], Map[String, Map[String, String]]) = {
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    writeHivePartitioned(df, dir, s"d-$nonce", partitionCols)
-  }
+  private[sources] def stageData(df: DataFrame, dir: String,
+                                 partitionCols: Seq[String] = Nil)
+      : (Seq[String], Map[String, Map[String, String]]) =
+    writeDataFiles(df, dir,
+      s"d-${java.util.UUID.randomUUID().toString.take(12)}", partitionCols)
 
   /** Publish previously-staged files as ONE commit: `create = true` is
     * the atomic CTAS (version 1 only, op `create-as` — append-safe for
@@ -2200,12 +2177,29 @@ object ManifestStore {
       dfSchema = Some(dfSchema), freshParts = freshParts, guard = guard)
   }
 
+  /** Write `df`'s files under the never-renamed prefix `dir/rel` and
+    * return the (relative file list, per-file partition values) a
+    * manifest commit records: hive-partitioned when `partitionCols` is
+    * set, plain parquet with a sorted part listing (and no partition
+    * values) otherwise — the data-plane step every writer shares
+    * ([[commit]], [[stageData]], [[compactSmall]], the dv sidecars of
+    * [[writeTombstones]] and the row-level writers' fresh files).
+    */
+  private def writeDataFiles(df: DataFrame, dir: String, rel: String,
+                             partitionCols: Seq[String] = Nil)
+      : (Seq[String], Map[String, Map[String, String]]) =
+    if (partitionCols.nonEmpty) writeHivePartitioned(df, dir, rel, partitionCols)
+    else {
+      df.write.mode("error").parquet(new Path(dir, rel).toString)
+      (fs(df.sparkSession, dir).listStatus(new Path(dir, rel)).toSeq
+        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+        .sorted.map(n => s"$rel/$n"), Map.empty)
+    }
+
   /** Write `df` hive-partitioned under `dir/dataRel` and return the
     * (relative file list, per-file partition values) a manifest commit
-    * records — the shared data-plane step of [[appendPartitioned]],
-    * [[overwritePartitioned]], and the row-level writers' fresh files on
-    * declared-partitioned tables ([[mergeRows]], [[updateWhere]],
-    * [[upsertKeyedDv]]).
+    * records — [[writeDataFiles]]' partitioned half, also the data-plane
+    * step of [[appendPartitioned]] and [[overwritePartitioned]].
     *
     * Layout notes: the writer partitions on hidden CLONES (`__p_<col>`)
     * so the real columns stay in the files — readers of explicit leaf
@@ -2468,12 +2462,7 @@ object ManifestStore {
     val (dfP, dfSchema) = planWrite(spark, dir, df)
     // 1. write the new data files once, under a unique never-renamed prefix
     val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"d-$nonce"
-    dfP.write.mode("error").parquet(new Path(dir, dataRel).toString)
-    val f = fs(spark, dir)
-    val fresh = f.listStatus(new Path(dir, dataRel)).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .sorted.map(n => s"$dataRel/$n")
+    val (fresh, _) = writeDataFiles(dfP, dir, s"d-$nonce")
     publishLoop(spark, dir, op, fresh, combine, maxAttempts, Some(dfSchema),
       guard = guard)
   }
@@ -3371,30 +3360,22 @@ object ManifestStore {
             .drop("_z")
         }
       val nonce = java.util.UUID.randomUUID().toString.take(12)
-      val dataRel = s"d-$nonce"
-      ColumnMapping.toPhysical(df, ColumnMapping.resolve(schema, snap.schema))
-        .write.mode("error").parquet(new Path(dir, dataRel).toString)
-      val fresh = f.listStatus(new Path(dir, dataRel)).toSeq
-        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-        .sorted.map(n => s"$dataRel/$n")
+      val (fresh, _) = writeDataFiles(ColumnMapping.toPhysical(df,
+        ColumnMapping.resolve(schema, snap.schema)), dir, s"d-$nonce")
       freshAll ++= fresh
       if (partVals.nonEmpty) fresh.foreach(r => freshParts += r -> partVals)
     }
-    // combine runs against the snapshot at commit time (re-based on lost
-    // races). A concurrent APPEND is fine — its files are not in the
+    // guard and combine run against the snapshot at commit time (re-based
+    // on lost races). A concurrent APPEND is fine — its files are not in the
     // compacted set and pass through untouched. A concurrent OVERWRITE (or
     // competing compaction) that removed any compacted-small file means
     // those rows were deliberately dropped or already rewritten — swapping
     // in our rewrite would resurrect them, so the compaction aborts
     // instead (Delta's conflict rule for OPTIMIZE vs overwrite).
     try Some(publishLoop(spark, dir, "compact", freshAll.result(),
-      { (prev, fresh) =>
-        if (!smallSet.forall(prev.contains))
-          throw new java.util.ConcurrentModificationException(
-            "snapshot changed under compaction")
-        prev.filterNot(smallSet.contains) ++ fresh
-      }, dfSchema = Some(schema), freshParts = freshParts.result(),
-      guard = Some(dvUnchangedGuard(snap, smallSet))))
+      (prev, fresh) => prev.filterNot(smallSet.contains) ++ fresh,
+      dfSchema = Some(schema), freshParts = freshParts.result(),
+      guard = Some(touchedGuard(snap, "compactSmall", smallSet, smallSet))))
     catch { case _: java.util.ConcurrentModificationException => None }
   }
 
@@ -3455,17 +3436,14 @@ object ManifestStore {
       })
     }.toSet
     val partial = touched.filterNot(dropWhole.contains)
-    val gone = dropWhole ++ partial
-    val abort = { (prev: Seq[String]) =>
-      if (!touched.forall(prev.contains))
-        throw new java.util.ConcurrentModificationException(
-          "snapshot changed under deleteRange")
-    }
+    val gone = touched.toSet
+    // every touched file must still be listed; the partial files' dv refs
+    // must be unchanged (their logical rows are read below)
+    val guard = Some(touchedGuard(snap, "deleteRange", touched, partial))
     try {
       if (partial.isEmpty)
-        Some(publishLoop(spark, dir, "delete", Nil, { (prev, _) =>
-          abort(prev); prev.filterNot(gone.contains)
-        }))
+        Some(publishLoop(spark, dir, "delete", Nil,
+          (prev, _) => prev.filterNot(gone), guard = guard))
       else {
         // LOGICAL read of the partial files (their dv tombstones applied):
         // the rewrite materializes prior merge-on-read deletes instead of
@@ -3482,27 +3460,91 @@ object ManifestStore {
         val survivors =
           readSnapshot(spark, dir, snap.copy(files = partial), schema)
             .filter(!inRange || col(column).isNull)
-        Some(commit(survivors, dir, "delete", { (prev, fresh) =>
-          abort(prev); prev.filterNot(gone.contains) ++ fresh
-        }, guard = Some(dvUnchangedGuard(snap, partial))))
+        Some(commit(survivors, dir, "delete",
+          (prev, fresh) => prev.filterNot(gone) ++ fresh, guard = guard))
       }
     } catch { case _: java.util.ConcurrentModificationException => None }
   }
 
-  /** A [[publishLoop]] guard proving the dv refs of `files` did not change
-    * since `planned` — the conflict rule for every rewrite that READ those
-    * files' logical rows: a concurrent [[deleteWhere]] tombstone landing
-    * after the read would be silently resurrected by the rewrite, so the
-    * commit aborts instead and the caller retries against the new state.
+  /** A [[publishLoop]] guard for a rewrite planned from PART of `planned`:
+    * every `listed` file (the ones it drops, replaces or tombstones) must
+    * still be in the snapshot, and the dv refs of every `read` file must
+    * be unchanged — a concurrent [[deleteWhere]] tombstone landing after
+    * the writer read those files' logical rows would be silently
+    * resurrected by the rewrite (or double-counted by a second sidecar),
+    * so the commit aborts instead and the caller retries against the new
+    * state.
     */
-  private def dvUnchangedGuard(planned: Snapshot,
-                               files: Iterable[String]): Snapshot => Unit = {
-    val basis = files.map(r => r -> planned.dvs.getOrElse(r, DvRef(Nil, 0L))).toMap
-    prev => basis.foreach { case (rel, ref) =>
-      if (prev.dvs.getOrElse(rel, DvRef(Nil, 0L)) != ref)
-        throw new java.util.ConcurrentModificationException(
-          s"deletion vectors changed under rewrite on $rel")
+  private def touchedGuard(planned: Snapshot, op: String,
+                           listed: Iterable[String],
+                           read: Iterable[String]): Snapshot => Unit = {
+    val basis = read.map(r => r -> planned.dvs.getOrElse(r, DvRef(Nil, 0L))).toMap
+    prev => {
+      listed.foreach { rel =>
+        if (!prev.files.contains(rel))
+          throw new java.util.ConcurrentModificationException(
+            s"file $rel rewritten under $op")
+      }
+      basis.foreach { case (rel, ref) =>
+        if (prev.dvs.getOrElse(rel, DvRef(Nil, 0L)) != ref)
+          throw new java.util.ConcurrentModificationException(
+            s"deletion vectors changed under $op on $rel")
+      }
     }
+  }
+
+  /** A [[publishLoop]] guard for a writer whose plan depends on the WHOLE
+    * `planned` file list (keyed upserts, MERGE: a concurrent append could
+    * carry a key the plan classified as new): any change to the list
+    * aborts, and so does a tombstone on any `read` file — every file for
+    * writers that classify the whole live table, the rewritten ones for
+    * [[upsertKeyed]].
+    */
+  private def unchangedGuard(planned: Snapshot, op: String,
+                             read: Iterable[String]): Snapshot => Unit = {
+    val readDvs = touchedGuard(planned, op, Nil, read)
+    prev => {
+      if (prev.files != planned.files)
+        throw new java.util.ConcurrentModificationException(
+          s"snapshot changed under $op")
+      readDvs(prev)
+    }
+  }
+
+  /** Refuse a keyed-upsert batch with two rows for one key (it has no
+    * defined winner) — one small aggregate on the batch side. Null keys
+    * are exempt: a null key matches nothing, so any number of null-key
+    * rows is a legal batch of pure inserts, not a duplicate-key conflict.
+    */
+  private def requireUniqueKeys(batch: DataFrame, keyCol: String): Unit = {
+    import org.apache.spark.sql.functions.{col, count => fcount, lit}
+    val dupKeys = batch.filter(col(keyCol).isNotNull)
+      .groupBy(col(keyCol)).agg(fcount(lit(1)).as("_n"))
+      .filter(col("_n") > 1).limit(1).count()
+    require(dupKeys == 0L, s"upsert batch has duplicate keys on $keyCol")
+  }
+
+  /** The tombstone half of every merge-on-read writer: write `doomed`'s
+    * row identities ([[dvNameCol]], [[dvIdxCol]] over live rows of `cand`)
+    * as `(f, i)` pairs into the sidecar `d-dv-<nonce>`, then read back the
+    * per-file counts from that (tiny) sidecar. Returns the dv deltas to
+    * publish keyed by file; an empty sidecar is deleted and yields none.
+    * Row identity keys on the parquet BASENAME, so the snapshot must not
+    * repeat one ([[requireUniqueBasenames]]).
+    */
+  private def writeTombstones(dir: String, snap: Snapshot, cand: Seq[String],
+                              doomed: DataFrame, nonce: String): Map[String, DvRef] = {
+    import org.apache.spark.sql.functions.col
+    requireUniqueBasenames(snap, dir)
+    val nameToRel = cand.map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
+    val dvRel = s"d-dv-$nonce"
+    val (parts, _) = writeDataFiles(doomed.select(col(dvNameCol).as("f"),
+      col(dvIdxCol).cast("long").as("i")), dir, dvRel)
+    val spark = doomed.sparkSession
+    val counts = spark.read.parquet(new Path(dir, dvRel).toString)
+      .groupBy(col("f")).count().collect()
+    if (counts.isEmpty) fs(spark, dir).delete(new Path(dir, dvRel), true): Unit
+    counts.map(r => nameToRel(r.getString(0)) -> DvRef(parts, r.getLong(1))).toMap
   }
 
   /** MERGE-ON-READ delete: tombstone every current row matching
@@ -3528,8 +3570,6 @@ object ManifestStore {
                   predicate: Column,
                   planRanges: Seq[(String, Any, Any)] = Nil,
                   exactRanges: Boolean = false): Option[Long] = {
-    import org.apache.spark.sql.functions.col
-    val f = fs(spark, dir)
     val snap = currentSnapshot(spark, dir).getOrElse(return None)
     if (snap.files.isEmpty) return Some(snap.version)
     // stats planning: `planRanges` are conjunctive bounds the caller
@@ -3561,42 +3601,18 @@ object ManifestStore {
             transformWhollyIn(snap, rel, c, lo, hi) ||
             statsWhollyIn(snap, rel, c, lo, hi) })
       }
-    val nonce = java.util.UUID.randomUUID().toString.take(12)
-    var deltas = Map.empty[String, DvRef]
-    if (cand.nonEmpty) {
-      requireUniqueBasenames(snap, dir)
-      val nameToRel = cand.map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
-      // live rows only: row ids exposed, existing tombstones anti-joined
-      val live = readFilesWithRowIds(spark, dir, snap, cand, schema)
-      val doomed = live.filter(predicate)
-        .select(col(dvNameCol).as("f"), col(dvIdxCol).cast("long").as("i"))
-      val dvRel = s"d-dv-$nonce"
-      doomed.write.mode("error").parquet(new Path(dir, dvRel).toString)
-      val parts = f.listStatus(new Path(dir, dvRel)).toSeq
-        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-        .sorted.map(n => s"$dvRel/$n")
-      // per-file tombstone counts from the (tiny) sidecar just written
-      val counts = spark.read.parquet(new Path(dir, dvRel).toString)
-        .groupBy(col("f")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.isEmpty) f.delete(new Path(dir, dvRel), true): Unit
-      else deltas = counts.map { case (name, n) =>
-        nameToRel(name) -> DvRef(parts, n) }
-    }
+    // live rows only: row ids exposed, existing tombstones anti-joined
+    val deltas =
+      if (cand.isEmpty) Map.empty[String, DvRef]
+      else writeTombstones(dir, snap, cand,
+        readFilesWithRowIds(spark, dir, snap, cand, schema).filter(predicate),
+        java.util.UUID.randomUUID().toString.take(12))
     if (deltas.isEmpty && droppedWhole.isEmpty) return Some(snap.version)
+    val touched = deltas.keys.toSeq ++ droppedWhole
     val droppedSet = droppedWhole.toSet
-    val guard = dvUnchangedGuard(snap, deltas.keys ++ droppedWhole)
-    val fileGuard: Snapshot => Unit = { prev =>
-      (deltas.keys ++ droppedWhole).foreach { rel =>
-        if (!prev.files.contains(rel))
-          throw new java.util.ConcurrentModificationException(
-            s"file $rel rewritten under deleteWhere")
-      }
-      guard(prev)
-    }
     try Some(publishLoop(spark, dir, "delete-dv", Nil,
-      (prev, _) => prev.filterNot(droppedSet),
-      freshDvDeltas = deltas, guard = Some(fileGuard)))
+      (prev, _) => prev.filterNot(droppedSet), freshDvDeltas = deltas,
+      guard = Some(touchedGuard(snap, "deleteWhere", touched, touched))))
     catch { case _: java.util.ConcurrentModificationException =>
       // the orphaned sidecar is unreferenced; vacuum collects it
       None
@@ -3627,36 +3643,20 @@ object ManifestStore {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     set.keys.foreach(c => require(schema.fieldNames.contains(c),
       s"SET column '$c' is not in the table schema (no implicit column adds)"))
-    val f = fs(spark, dir)
     val snap = currentSnapshot(spark, dir).getOrElse(return None)
     if (snap.files.isEmpty) return Some(snap.version)
     val cand =
       if (planRanges.isEmpty) snap.files else pruneFilesWhere(snap, planRanges)
     if (cand.isEmpty) return Some(snap.version)
-    requireUniqueBasenames(snap, dir)
-    val nameToRel = cand.map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
     def liveIded = readFilesWithRowIds(spark, dir, snap, cand, schema)
     // 1. tombstone sidecar for the old images
     val nonce = java.util.UUID.randomUUID().toString.take(12)
-    val dvRel = s"d-dv-$nonce"
-    liveIded.filter(predicate)
-      .select(col(dvNameCol).as("f"), col(dvIdxCol).cast("long").as("i"))
-      .write.mode("error").parquet(new Path(dir, dvRel).toString)
-    val parts = f.listStatus(new Path(dir, dvRel)).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .sorted.map(n => s"$dvRel/$n")
-    val counts = spark.read.parquet(new Path(dir, dvRel).toString)
-      .groupBy(col("f")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (counts.isEmpty) {
-      f.delete(new Path(dir, dvRel), true)
-      return Some(snap.version)
-    }
+    val deltas = writeTombstones(dir, snap, cand, liveIded.filter(predicate), nonce)
+    if (deltas.isEmpty) return Some(snap.version)
     // 2. fresh files with the new images (immutable inputs: this second
     // scan selects exactly the rows the sidecar tombstoned); a
     // declared-partitioned table keeps its layout and per-file partition
     // values so pruning survives sustained row-level maintenance
-    val dataRel = s"d-$nonce"
     val updated0 = enforceChecks(
       liveIded.filter(predicate).withColumns(set)
         .select(schema.fieldNames.toIndexedSeq.map(col): _*), Some(snap))
@@ -3665,29 +3665,11 @@ object ManifestStore {
     val updated = ColumnMapping.toPhysical(updated0,
       ColumnMapping.resolve(schema, snap.schema))
     val (freshFiles, freshParts) =
-      if (snap.partitionCols.nonEmpty)
-        writeHivePartitioned(updated, dir, dataRel, snap.partitionCols)
-      else {
-        updated.write.mode("error").parquet(new Path(dir, dataRel).toString)
-        (f.listStatus(new Path(dir, dataRel)).toSeq
-          .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-          .sorted.map(n => s"$dataRel/$n"),
-          Map.empty[String, Map[String, String]])
-      }
-    val deltas = counts.map { case (name, n) => nameToRel(name) -> DvRef(parts, n) }
-    val guard = dvUnchangedGuard(snap, deltas.keys)
-    val fileGuard: Snapshot => Unit = { prev =>
-      deltas.keys.foreach { rel =>
-        if (!prev.files.contains(rel))
-          throw new java.util.ConcurrentModificationException(
-            s"file $rel rewritten under updateWhere")
-      }
-      guard(prev)
-    }
+      writeDataFiles(updated, dir, s"d-$nonce", snap.partitionCols)
     try Some(publishLoop(spark, dir, "update-dv", freshFiles,
       (prev, fresh) => prev ++ fresh, dfSchema = Some(schema),
       freshParts = freshParts, freshDvDeltas = deltas,
-      guard = Some(fileGuard)))
+      guard = Some(touchedGuard(snap, "updateWhere", deltas.keys, deltas.keys))))
     catch { case _: java.util.ConcurrentModificationException => None }
   }
 
@@ -3725,14 +3707,8 @@ object ManifestStore {
                                  schema: StructType, batch: DataFrame,
                                  keyCol: String,
                                  midFlight: () => Unit): Option[Long] = {
-    import org.apache.spark.sql.functions.{col, count => fcount, lit, max => fmax, min => fmin}
-    // null keys are excluded from the duplicate guard: a null key matches
-    // nothing (documented semantics below), so any number of null-key rows
-    // is a legal batch of pure inserts, not a duplicate-key conflict
-    val dupKeys = batch.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol)).agg(fcount(lit(1)).as("_n"))
-      .filter(col("_n") > 1).limit(1).count()
-    require(dupKeys == 0L, s"upsert batch has duplicate keys on $keyCol")
+    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
+    requireUniqueKeys(batch, keyCol)
     val snap = currentSnapshot(spark, dir).getOrElse {
       return Some(commit(batch, dir, "upsert", (_, fresh) => fresh))
     }
@@ -3744,20 +3720,15 @@ object ManifestStore {
       else pruneFiles(snap, keyCol, b.get(0), b.get(1))
     midFlight()
     val touchedSet = touched.toSet
-    val abort = { (prev: Seq[String]) =>
-      if (prev != snap.files)
-        throw new java.util.ConcurrentModificationException(
-          "snapshot changed under upsertKeyed")
-    }
     try {
       val fresh =
         if (touched.isEmpty) batch
         else readSnapshot(spark, dir, snap.copy(files = touched), schema)
           .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
           .unionByName(batch)
-      Some(commit(fresh, dir, "upsert", { (prev, freshFiles) =>
-        abort(prev); prev.filterNot(touchedSet.contains) ++ freshFiles
-      }, guard = Some(dvUnchangedGuard(snap, touched))))
+      Some(commit(fresh, dir, "upsert",
+        (prev, freshFiles) => prev.filterNot(touchedSet) ++ freshFiles,
+        guard = Some(unchangedGuard(snap, "upsertKeyed", touched))))
     } catch { case _: java.util.ConcurrentModificationException => None }
   }
 
@@ -3781,12 +3752,8 @@ object ManifestStore {
     */
   def upsertKeyedDv(spark: SparkSession, dir: String, schema: StructType,
                     batch: DataFrame, keyCol: String): Option[Long] = {
-    import org.apache.spark.sql.functions.{col, count => fcount, lit, max => fmax, min => fmin}
-    val dupKeys = batch.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol)).agg(fcount(lit(1)).as("_n"))
-      .filter(col("_n") > 1).limit(1).count()
-    require(dupKeys == 0L, s"upsert batch has duplicate keys on $keyCol")
-    val f = fs(spark, dir)
+    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
+    requireUniqueKeys(batch, keyCol)
     val snap = currentSnapshot(spark, dir).getOrElse {
       return Some(commit(batch, dir, "upsert-dv", (_, fresh) => fresh))
     }
@@ -3794,51 +3761,25 @@ object ManifestStore {
     val cand =
       if (b.isNullAt(0)) Seq.empty // all-null-key batch: pure insert
       else pruneFiles(snap, keyCol, b.get(0), b.get(1))
-    requireUniqueBasenames(snap, dir)
-    val nameToRel = cand.map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
-    val abort: Snapshot => Unit = { prev =>
-      if (prev.files != snap.files || prev.dvs != snap.dvs)
-        throw new java.util.ConcurrentModificationException(
-          "snapshot changed under upsertKeyedDv")
-    }
     val nonce = java.util.UUID.randomUUID().toString.take(12)
-    var deltas = Map.empty[String, DvRef]
-    if (cand.nonEmpty) {
-      // live rows in candidate files whose key the batch carries
-      val live = readFilesWithRowIds(spark, dir, snap, cand, schema)
-      val dvRel = s"d-dv-$nonce"
-      live.join(batch.select(col(keyCol)).filter(col(keyCol).isNotNull),
-          Seq(keyCol), "left_semi")
-        .select(col(dvNameCol).as("f"), col(dvIdxCol).cast("long").as("i"))
-        .write.mode("error").parquet(new Path(dir, dvRel).toString)
-      val parts = f.listStatus(new Path(dir, dvRel)).toSeq
-        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-        .sorted.map(n => s"$dvRel/$n")
-      val counts = spark.read.parquet(new Path(dir, dvRel).toString)
-        .groupBy(col("f")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.isEmpty) f.delete(new Path(dir, dvRel), true)
-      else deltas = counts.map { case (name, n) =>
-        nameToRel(name) -> DvRef(parts, n)
-      }
-    }
-    val dataRel = s"d-$nonce"
+    // live rows in candidate files whose key the batch carries
+    val deltas =
+      if (cand.isEmpty) Map.empty[String, DvRef]
+      else writeTombstones(dir, snap, cand,
+        readFilesWithRowIds(spark, dir, snap, cand, schema).join(
+          batch.select(col(keyCol)).filter(col(keyCol).isNotNull),
+          Seq(keyCol), "left_semi"), nonce)
     val (batchP, batchSchema) = planWrite(spark, dir, batch)
-    val (freshFiles, freshParts) =
-      if (snap.partitionCols.nonEmpty &&
-          snap.partitionCols.forall(s =>
-            batchP.columns.contains(PartitionSpec.sourceCol(s))))
-        writeHivePartitioned(batchP, dir, dataRel, snap.partitionCols)
-      else {
-        batchP.write.mode("error").parquet(new Path(dir, dataRel).toString)
-        (f.listStatus(new Path(dir, dataRel)).toSeq
-          .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-          .sorted.map(n => s"$dataRel/$n"),
-          Map.empty[String, Map[String, String]])
-      }
+    // a batch lacking a declared partition column's source writes plain
+    val pcols =
+      if (snap.partitionCols.forall(s =>
+          batchP.columns.contains(PartitionSpec.sourceCol(s)))) snap.partitionCols
+      else Nil
+    val (freshFiles, freshParts) = writeDataFiles(batchP, dir, s"d-$nonce", pcols)
     try Some(publishLoop(spark, dir, "upsert-dv", freshFiles,
       (prev, fresh) => prev ++ fresh, dfSchema = Some(batchSchema),
-      freshParts = freshParts, freshDvDeltas = deltas, guard = Some(abort)))
+      freshParts = freshParts, freshDvDeltas = deltas,
+      guard = Some(unchangedGuard(snap, "upsertKeyedDv", snap.files))))
     catch { case _: java.util.ConcurrentModificationException => None }
   }
 
@@ -3993,29 +3934,19 @@ object ManifestStore {
       // commit will reference; otherwise the raw __s_ frame stages to the
       // scratch dir.
       val pcols = snap.partitionCols
-      val srcPath =
-        if (canonicalMap.isDefined) new Path(dir, dataRel)
-        else new Path(stageDir, "src")
+      val srcPath = new Path(stageDir, "src")
       // canonical staging lands as the commit's data files — on a
       // declared-partitioned table through the hive-partitioned writer,
       // so sustained MERGE maintenance never erodes partition pruning
-      var stagedFiles = Seq.empty[String]
-      var stagedParts = Map.empty[String, Map[String, String]]
-      canonicalMap match {
+      val (stagedFiles, stagedParts) = canonicalMap match {
         case Some(mp) =>
-          val img = ColumnMapping.toPhysical(enforceChecks(
+          writeDataFiles(ColumnMapping.toPhysical(enforceChecks(
             source.select(schema.fields.toIndexedSeq.map(fd =>
-              col(mp(fd.name)).as(fd.name)): _*), Some(snap)), rs)
-          if (pcols.nonEmpty) {
-            val (fl, fp) = writeHivePartitioned(img, dir, dataRel, pcols)
-            stagedFiles = fl; stagedParts = fp
-          } else {
-            img.write.mode("error").parquet(srcPath.toString)
-            stagedFiles = f.listStatus(srcPath).toSeq
-              .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-              .sorted.map(n => s"$dataRel/$n")
-          }
-        case None => source.write.mode("error").parquet(srcPath.toString)
+              col(mp(fd.name)).as(fd.name)): _*), Some(snap)), rs),
+            dir, dataRel, pcols)
+        case None =>
+          source.write.mode("error").parquet(srcPath.toString)
+          (Seq.empty[String], Map.empty[String, Map[String, String]])
       }
       val srcHasParts =
         if (canonicalMap.isDefined) stagedFiles.nonEmpty
@@ -4058,8 +3989,10 @@ object ManifestStore {
           if (ranges.size < equiKeys.size) Nil
           else pruneFilesWhere(snap, ranges)
         }
+      // checked up front, not only at the tombstone write: the matched
+      // pairs' target identity (cardinality check, by-source anti-join)
+      // keys on the same basenames
       requireUniqueBasenames(snap, dir)
-      val nameToRel = cand.map(r => r.substring(r.lastIndexOf('/') + 1) -> r).toMap
       def liveCand: DataFrame =
         readFilesWithRowIds(spark, dir, snap, cand, schema)
       // 3. matched pairs staged once: cardinality check, tombstones,
@@ -4106,7 +4039,7 @@ object ManifestStore {
       def tombOf(df: DataFrame, clauses: Seq[MergeClause]): DataFrame =
         df.withColumn("__graft_act", actionOf(clauses))
           .filter(col("__graft_act") >= 0)
-          .select(col(dvNameCol).as("f"), col(dvIdxCol).cast("long").as("i"))
+          .select(col(dvNameCol), col(dvIdxCol))
       val mTomb = if (matched.isEmpty) None else mdf.map(tombOf(_, matched))
       val mImages = if (matched.isEmpty || canonicalMap.isDefined) Nil
         else mdf.toSeq.flatMap(images(_, matched, col))
@@ -4138,78 +4071,40 @@ object ManifestStore {
           (Some(tombOf(only, bySource)), images(only, bySource, col))
         }
       // 6. tombstone sidecar + fresh image files, one atomic commit
-      var deltas = Map.empty[String, DvRef]
-      val dvRel = s"d-dv-$nonce"
-      (mTomb.toSeq ++ bsTomb.toSeq).reduceOption(_ unionAll _).foreach { t =>
-        t.write.mode("error").parquet(new Path(dir, dvRel).toString)
-        val parts = f.listStatus(new Path(dir, dvRel)).toSeq
-          .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-          .sorted.map(n => s"$dvRel/$n")
-        val counts = spark.read.parquet(new Path(dir, dvRel).toString)
-          .groupBy(col("f")).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (counts.isEmpty) { f.delete(new Path(dir, dvRel), true): Unit }
-        else deltas = counts.map { case (name, n) =>
-          nameToRel(name) -> DvRef(parts, n)
-        }
-      }
-      var freshFiles = Seq.empty[String]
-      var freshParts = Map.empty[String, Map[String, String]]
-      if (canonicalMap.isDefined) {
-        // the staged images ARE the fresh data; duplicate matched TARGET
-        // rows (N target rows sharing one source row) each take the same
-        // image, so replicate it N−1 extra times — row-preserving MERGE
-        freshFiles = stagedFiles
-        freshParts = stagedParts
-        mdf.foreach { m =>
-          import org.apache.spark.sql.functions.{explode, sequence}
-          val dups = m.groupBy(col(srcRidF), col(srcRidI))
-            .agg(fcount(lit(1)).as("__graft_n")).filter(col("__graft_n") > 1)
-          if (dups.limit(1).count() > 0) {
-            val srcImg = readFilesWithRowIds(spark, dir, snap, stagedFiles,
-                schema, applyDvs = false)
-              .withColumnRenamed(dvNameCol, srcRidF)
-              .withColumnRenamed(dvIdxCol, srcRidI)
-            val extraRel = s"d-x-$nonce"
-            val extra = ColumnMapping.toPhysical(
-              srcImg.join(dups, Seq(srcRidF, srcRidI))
-                .withColumn("__graft_rep",
-                  explode(sequence(lit(2L), col("__graft_n"))))
-                .select(schema.fieldNames.toIndexedSeq.map(col): _*), rs)
-            if (pcols.nonEmpty) {
-              val (fl, fp) = writeHivePartitioned(extra, dir, extraRel, pcols)
-              freshFiles = freshFiles ++ fl; freshParts = freshParts ++ fp
-            } else {
-              extra.write.mode("error").parquet(new Path(dir, extraRel).toString)
-              freshFiles = freshFiles ++ f.listStatus(new Path(dir, extraRel))
-                .toSeq.map(_.getPath.getName).filter(_.endsWith(".parquet"))
-                .sorted.map(n => s"$extraRel/$n")
+      val deltas = (mTomb.toSeq ++ bsTomb).reduceOption(_ unionAll _)
+        .fold(Map.empty[String, DvRef])(writeTombstones(dir, snap, cand, _, nonce))
+      val noFiles = (Seq.empty[String], Map.empty[String, Map[String, String]])
+      val (freshFiles, freshParts) =
+        if (canonicalMap.isDefined) {
+          // the staged images ARE the fresh data; duplicate matched TARGET
+          // rows (N target rows sharing one source row) each take the same
+          // image, so replicate it N−1 extra times — row-preserving MERGE
+          val (extraFiles, extraParts) = mdf.fold(noFiles) { m =>
+            import org.apache.spark.sql.functions.{explode, sequence}
+            val dups = m.groupBy(col(srcRidF), col(srcRidI))
+              .agg(fcount(lit(1)).as("__graft_n")).filter(col("__graft_n") > 1)
+            if (dups.limit(1).count() == 0) noFiles else {
+              val srcImg = readFilesWithRowIds(spark, dir, snap, stagedFiles,
+                  schema, applyDvs = false)
+                .withColumnRenamed(dvNameCol, srcRidF)
+                .withColumnRenamed(dvIdxCol, srcRidI)
+              writeDataFiles(ColumnMapping.toPhysical(
+                srcImg.join(dups, Seq(srcRidF, srcRidI))
+                  .withColumn("__graft_rep",
+                    explode(sequence(lit(2L), col("__graft_n"))))
+                  .select(schema.fieldNames.toIndexedSeq.map(col): _*), rs),
+                dir, s"d-x-$nonce", pcols)
             }
           }
-        }
-      } else {
-        (mImages ++ bsImages ++ insImages).reduceOption(_ unionAll _).foreach { df0 =>
-          val df = ColumnMapping.toPhysical(enforceChecks(df0, Some(snap)), rs)
-          if (pcols.nonEmpty) {
-            val (fl, fp) = writeHivePartitioned(df, dir, dataRel, pcols)
-            freshFiles = fl; freshParts = fp
-          } else {
-            df.write.mode("error").parquet(new Path(dir, dataRel).toString)
-            freshFiles = f.listStatus(new Path(dir, dataRel)).toSeq
-              .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-              .sorted.map(n => s"$dataRel/$n")
-          }
-        }
-      }
+          (stagedFiles ++ extraFiles, stagedParts ++ extraParts)
+        } else (mImages ++ bsImages ++ insImages).reduceOption(_ unionAll _)
+          .fold(noFiles) { df0 => writeDataFiles(ColumnMapping.toPhysical(
+            enforceChecks(df0, Some(snap)), rs), dir, dataRel, pcols) }
       if (deltas.isEmpty && freshFiles.isEmpty) return Some(snap.version)
-      val abort: Snapshot => Unit = { prev =>
-        if (prev.files != snap.files || prev.dvs != snap.dvs)
-          throw new java.util.ConcurrentModificationException(
-            "snapshot changed under mergeRows")
-      }
       try Some(publishLoop(spark, dir, "merge-dv", freshFiles,
         (prev, fresh) => prev ++ fresh, dfSchema = Some(schema),
-        freshParts = freshParts, freshDvDeltas = deltas, guard = Some(abort)))
+        freshParts = freshParts, freshDvDeltas = deltas,
+        guard = Some(unchangedGuard(snap, "mergeRows", snap.files))))
       catch { case _: java.util.ConcurrentModificationException => None }
     } finally {
       // the staged source/matched copies are never referenced by a

@@ -33,6 +33,13 @@ class ManifestDvSpec extends SparkSpec {
   private def keys(dir: String): Set[Long] =
     ManifestStore.read(spark, dir, schema).as[(Long, String)].collect().map(_._1).toSet
 
+  /** The directories directly under the table root (data, sidecar and
+    * staging prefixes) — a writer that commits nothing must leave this
+    * set as it found it.
+    */
+  private def topDirs(dir: String): Set[String] =
+    new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
+
   private def threeFileTable(): String = {
     val dir = tmpDir()
     ManifestStore.append(strideDf(0), dir)
@@ -68,10 +75,13 @@ class ManifestDvSpec extends SparkSpec {
     // per-file refs accumulate sidecars
     assert(snap(dir).dvs.values.exists(_.files.size >= 2))
 
-    // a no-match delete is a no-op returning the current version
+    // a no-match delete is a no-op returning the current version, and
+    // its empty sidecar does not outlive the call
+    val dirsBefore = topDirs(dir)
     assert(ManifestStore.deleteWhere(spark, dir, schema, col("k") > 1000L)
       === Some(v2.get))
     assert(snap(dir).version === v2.get)
+    assert(topDirs(dir) === dirsBefore)
 
     // time travel still sees the rows
     assert(ManifestStore.readVersion(spark, dir, before.version, schema)
@@ -184,9 +194,11 @@ class ManifestDvSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(keyed === Map("update_preimage" -> 6L, "update_postimage" -> 6L))
 
-    // no-match update: no commit
+    // no-match update: no commit, no sidecar or data dir left behind
+    val dirsBefore = topDirs(dir)
     assert(ManifestStore.updateWhere(spark, dir, schema, col("k") > 999L,
       Map("v" -> lit("x"))) === Some(s.version))
+    assert(topDirs(dir) === dirsBefore)
     // compaction materializes the update
     ManifestStore.compact(spark, dir, schema, numFiles = 1)
     assert(snap(dir).dvs.isEmpty)
@@ -226,6 +238,33 @@ class ManifestDvSpec extends SparkSpec {
     assert(ManifestStore.upsertKeyedDv(spark, dir2, schema,
       Seq((1L, "a")).toDF("k", "v"), "k").isDefined)
     assert(keys(dir2) === Set(1L))
+  }
+
+  test("upsertKeyedDv and mergeRows touching no row leave no sidecar or staging dir") {
+    // keys 0, 3, …, 297: key 4 lies inside the file's key bounds, so the
+    // file is a candidate and the tombstone scan runs, but nothing matches
+    val dir = tmpDir()
+    ManifestStore.append(strideDf(0), dir)
+    val dirsBefore = topDirs(dir)
+    val v0 = snap(dir).version
+    ManifestStore.upsertKeyedDv(spark, dir, schema,
+      Seq((4L, "NEW4")).toDF("k", "v"), "k")
+    val s = snap(dir)
+    assert(s.op === "upsert-dv" && s.dvs.isEmpty)
+    // only the batch's data dir is new
+    assert((topDirs(dir) -- dirsBefore).forall(n => n.startsWith("d-") &&
+      !n.startsWith("d-dv-")))
+    assert(keys(dir) === (0L until 300L by 3).toSet + 4L)
+
+    // a DELETE-only MERGE whose source matches no row: the matched pairs
+    // and the tombstone sidecar are written empty, then removed
+    val dirsMid = topDirs(dir)
+    val src = Seq((1000L, "x"), (1001L, "y")).toDF("__s_k", "__s_v")
+    assert(ManifestStore.mergeRows(spark, dir, schema, src,
+      col("k") === col("__s_k"),
+      Seq(ManifestStore.MergeClause(None, None)), Nil) === Some(s.version))
+    assert(snap(dir).version === s.version && s.version === v0 + 1)
+    assert(topDirs(dir) === dirsMid)
   }
 
   test("restore rolls back as a new commit, dvs included, with exact CDC") {

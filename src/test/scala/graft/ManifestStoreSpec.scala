@@ -465,9 +465,12 @@ class ManifestStoreSpec extends SparkSpec {
     assert(feed === Set((2L, "b", "delete"), (2L, "B2", "insert"), (3L, "c", "insert")))
     // metadata count stays exact
     assert(ManifestStore.countRows(spark, dir) === Some(4L))
-    // a duplicate-key batch has no defined winner: refused
+    // a duplicate-key batch has no defined winner: refused by both upserts
     intercept[IllegalArgumentException] {
       ManifestStore.upsertKeyed(spark, dir, schema, df(7L -> "x", 7L -> "y"), "k")
+    }
+    intercept[IllegalArgumentException] {
+      ManifestStore.upsertKeyedDv(spark, dir, schema, df(7L -> "x", 7L -> "y"), "k")
     }
   }
 
@@ -707,17 +710,23 @@ class ManifestStoreSpec extends SparkSpec {
   }
 
   test("upsertKeyed: multiple null-key rows are legal pure inserts, not duplicates") {
-    val dir = tmpDir()
-    ManifestStore.upsertKeyed(spark, dir, schema, df(1L -> "a"), "k")
-    // null keys match nothing → always insert; two of them must NOT trip
-    // the duplicate-key guard (round-4 advice: the guard grouped nulls)
-    val batch = Seq[(java.lang.Long, String)]((null, "n1"), (null, "n2"), (2L, "b"))
-      .toDF("k", "v")
-    val v = ManifestStore.upsertKeyed(spark, dir, schema, batch, "k")
-    assert(v.nonEmpty)
-    val out = ManifestStore.read(spark, dir, schema)
-      .as[(Option[Long], String)].collect().toSet
-    assert(out === Set(Some(1L) -> "a", Some(2L) -> "b", None -> "n1", None -> "n2"))
+    // both upserts share the duplicate-key guard and its null exemption
+    val upserts = Seq[(String, org.apache.spark.sql.DataFrame, String) => Option[Long]](
+      ManifestStore.upsertKeyed(spark, _, schema, _, _),
+      ManifestStore.upsertKeyedDv(spark, _, schema, _, _))
+    upserts.foreach { upsert =>
+      val dir = tmpDir()
+      upsert(dir, df(1L -> "a"), "k")
+      // null keys match nothing → always insert; two of them must NOT trip
+      // the duplicate-key guard (round-4 advice: the guard grouped nulls)
+      val batch = Seq[(java.lang.Long, String)]((null, "n1"), (null, "n2"), (2L, "b"))
+        .toDF("k", "v")
+      val v = upsert(dir, batch, "k")
+      assert(v.nonEmpty)
+      val out = ManifestStore.read(spark, dir, schema)
+        .as[(Option[Long], String)].collect().toSet
+      assert(out === Set(Some(1L) -> "a", Some(2L) -> "b", None -> "n1", None -> "n2"))
+    }
   }
 
   test("mergeSchemas widens nullability and never narrows it") {
